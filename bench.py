@@ -4,22 +4,17 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Stability (round-3 rework — sub-second best-of-2 timings in a shared
-session produced phantom 1.2-1.45x "regressions" in round 2's
-cross-round comparison):
-
-* queries run in SORTED name order, so catalog reordering between
-  rounds cannot change warm-up interactions;
+* queries run in SORTED name order, so the catalog's declaration order
+  cannot change warm-up interactions;
 * each query gets one UNTIMED warm run (codegen/JIT compile, 3-6x
-  noise locally, irrelevant at cluster scale) then best-of-3 timed;
+  noise locally, irrelevant at cluster scale) then RUNS_PER_QUERY timed
+  runs; its best is the recorded time;
 * per-query relative spread of the timed runs is reported
-  ("spread_pct" — a FRACTION, 0.25 = 25%, key name kept for
-  cross-round continuity; plus the worst offender) so a reader can
-  tell noise from regression before comparing rounds;
-* (round-5) queries whose spread exceeded 1% in the PREVIOUS round's
-  recorded bench (latest BENCH_r*.json) get 5 timed runs instead of 3,
-  so a one-off GC/compaction hit can't become the recorded best-of and
-  the flaky tail self-heals round over round.
+  ("spread_pct" — a FRACTION, 0.25 = 25%; plus the worst offender) so
+  a reader can tell noise from a real change.
+
+Comparing two versions of the code is the job of ``perfbench/``, which
+runs both on the same host; this record describes one run only.
 
 Each query is fully materialized via write.format("noop") — forces
 every operator, no driver-side collect cost in the timing.
@@ -27,119 +22,25 @@ every operator, no driver-side collect cost in the timing.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 import time
 
-
-def _last_round_record() -> dict:
-    """Parsed bench JSON of the latest recorded BENCH_r*.json (the
-    previous round's driver run). Missing/corrupt file → {}."""
-    here = os.path.dirname(os.path.abspath(__file__))
-
-    def _round_no(path: str) -> int:
-        m = re.search(r"BENCH_r(\d+)\.json$", os.path.basename(path))
-        return int(m.group(1)) if m else -1
-
-    # numeric round order — lexicographic misorders r9 vs r10 and any
-    # round past two digits (ADVICE r5)
-    benches = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")), key=_round_no)
-    if not benches:
-        return {}
-    try:
-        with open(benches[-1]) as f:
-            rec = json.load(f)
-        blob = rec.get("tail", "")
-        # the driver wraps bench stdout; the JSON line is the last {...}
-        line = blob[blob.rfind('{"metric"'):] if '{"metric"' in blob else ""
-        if line:
-            data = json.loads(line)
-        elif blob:
-            # the driver records only the LAST N bytes of stdout, so a
-            # long JSON line arrives FRONT-truncated (r9's record cut
-            # mid-"queries" and every cross-round delta silently
-            # vanished). Salvage what survives: the per-query pairs
-            # after the innermost '{' before "spread_pct" (a possibly
-            # partial queries dict — fewer deltas, never wrong ones),
-            # plus any complete trailing dict sections.
-            data = _salvage_truncated(blob)
-            if data:
-                print(
-                    f"bench: {os.path.basename(benches[-1])} JSON was "
-                    f"front-truncated; salvaged {len(data.get('queries', {}))} "
-                    "query timings for the cross-round comparison",
-                    file=sys.stderr,
-                )
-        else:
-            data = rec
-        return data if isinstance(data, dict) else {}
-    except (ValueError, OSError) as e:
-        print(
-            f"bench: could not parse {os.path.basename(benches[-1])} ({e}); "
-            "previous-round comparisons disabled this run",
-            file=sys.stderr,
-        )
-        return {}
-
-
-def _salvage_truncated(blob: str) -> dict:
-    """Best-effort parse of a FRONT-truncated bench JSON line (see
-    caller). Returns {} when nothing recognizable survives."""
-    import re
-
-    out: dict = {}
-    for key in ("spread_pct", "host_calibration"):
-        m = re.search(rf'"{key}": (\{{[^{{}}]*\}})', blob)
-        if m:
-            try:
-                out[key] = json.loads(m.group(1))
-            except ValueError:
-                pass
-    m = re.search(r'"queries": (\{[^{}]*\})', blob)
-    if m:
-        try:
-            out["queries"] = json.loads(m.group(1))
-            return out
-        except ValueError:
-            pass
-    head = blob.split('"spread_pct"')[0]
-    frag = head[head.rfind("{") + 1:]
-    pairs = re.findall(r'"([a-z0-9_]+)": ([0-9][0-9.eE+-]*)', frag)
-    if pairs:
-        out["queries"] = {k: float(v) for k, v in pairs}
-    return out
-
-
-def _flaky_from_last_round(prev: dict) -> set[str]:
-    """Names whose spread exceeded 1% in the previous round's record."""
-    spreads = prev.get("spread_pct", {})
-    if not isinstance(spreads, dict) or not spreads:
-        if prev:
-            print(
-                "bench: no spread_pct in previous record; "
-                "flaky set empty (5-run rule degrades to 3 runs)",
-                file=sys.stderr,
-            )
-        return set()
-    return {n for n, s in spreads.items() if isinstance(s, (int, float)) and s > 0.01}
+RUNS_PER_QUERY = 3
 
 
 def _host_calibration(spark) -> dict:
     """Fixed-work probes timed on THIS run's host, emitted in the
-    artifact so cross-round wall-clock deltas can be normalized by
-    measured host speed (round 9: a contended driver host drifted every
-    untouched query a near-uniform 1.1-1.4x; without a same-run speed
-    anchor, load noise and real regression are indistinguishable).
+    record so a reader comparing records from different hosts or load
+    conditions can tell host speed from code speed.
 
     Two probes: a pure-CPU single-thread Python loop (interpreter +
     effective core clock under current load) and a tiny constant Spark
     job (JVM scheduler + codegen + noop-sink path, 8 tasks).  Both are
     best-of-3 after one untimed warm run, same discipline as the
-    queries.  The work is FROZEN — changing either probe invalidates
-    cross-round normalization, so don't."""
+    queries.  The work is FROZEN — changing either probe makes older
+    records incomparable, so don't."""
 
     def cpu_probe() -> int:
         acc = 0
@@ -169,7 +70,6 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
     from hobbes_spark.queries import QUERIES
     from hobbes_spark.session import get_spark
@@ -189,27 +89,12 @@ def main() -> None:
     materialize(names[0])  # JVM + parquet-footer warmup
 
     calibration = _host_calibration(spark)
-    prev = _last_round_record()
-    # Host-speed normalization: if the previous record carries the same
-    # calibration probes, scale its per-query times by the measured
-    # CPU-speed ratio before computing spread-unit deltas.  Ratio > 1
-    # means THIS host/run is slower, so previous times are scaled UP —
-    # a uniform contended-host drift then lands near 0 units instead of
-    # flagging every query.  First round with a calibrated prev record
-    # activates this; against older records the ratio is 1 (raw compare).
-    prev_cal = prev.get("host_calibration", {})
-    host_speed_vs_prev = None
-    if isinstance(prev_cal, dict):
-        pc = prev_cal.get("cpu_loop_sec")
-        if isinstance(pc, (int, float)) and pc > 0:
-            host_speed_vs_prev = round(calibration["cpu_loop_sec"] / pc, 3)
-    flaky = _flaky_from_last_round(prev)
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     for name in names:
         materialize(name)  # untimed warm run: one-time codegen/JIT
         samples = []
-        for _ in range(max(runs, 5) if name in flaky else runs):
+        for _ in range(RUNS_PER_QUERY):
             t0 = time.perf_counter()
             materialize(name)
             samples.append(time.perf_counter() - t0)
@@ -229,44 +114,13 @@ def main() -> None:
     ]
     missing_core = [n for n in _R1_CORE if n not in timings]
     if missing_core:
-        # a silently-shrunken core sum would read as a phantom speedup in
-        # the cross-round comparison this frozen subset exists to protect
+        # a silently-shrunken core sum would read as a phantom speedup
         raise SystemExit(f"bench: frozen R1 core queries missing: {missing_core}")
     core = round(sum(timings[n] for n in _R1_CORE), 3)
     # the recorded r1 baseline for that same frozen core set at sf0.1
-    # (BENCH_r01.json). Emitting the ratio makes each BENCH_rN.json
-    # self-interpreting: cross-round wall-clock is only meaningful as
-    # ratio-of-ratios against the same session's core re-measure, since
-    # shared-host speed drifts between sessions (r6: every query slower
-    # by a uniform ~35%, core ratio still 1.00x).
+    # (BENCH_r01.json); the ratio is only meaningful next to
+    # host_calibration, since host speed drifts between sessions
     _R1_CORE_RECORDED = 8.622
-    worst = max(spreads, key=spreads.get) if spreads else None
-
-    # Spread-aware regression flag (r8 verdict item 6 — dedup_exact
-    # drifted +15.8% against a 6.6% spread and nothing flagged it):
-    # per query, the delta vs the previous round's recorded best, in
-    # units of the LARGER of the two recorded spreads (floored at 1% so
-    # a run whose 3 samples happened to tie can't turn microsecond
-    # noise into infinite units). >2 units is flagged — observability
-    # only, never an exit criterion: cross-round wall-clock drifts with
-    # shared-host load, and the flag exists so a reader compares the
-    # flagged query's PLAN, not so CI goes red.
-    prev_q = prev.get("queries", {}) if isinstance(prev.get("queries"), dict) else {}
-    prev_s = prev.get("spread_pct", {}) if isinstance(prev.get("spread_pct"), dict) else {}
-    delta_units: dict[str, float] = {}
-    for name, t in timings.items():
-        p = prev_q.get(name)
-        if not isinstance(p, (int, float)) or p <= 0:
-            continue
-        if host_speed_vs_prev:
-            p = p * host_speed_vs_prev
-        unit = max(
-            prev_s.get(name, 0) if isinstance(prev_s.get(name, 0), (int, float)) else 0,
-            spreads[name],
-            0.01,
-        )
-        delta_units[name] = round((t - p) / p / unit, 1)
-    regression_flags = sorted(n for n, u in delta_units.items() if u > 2)
     record = {
         "metric": "headline_queries_total",
         "value": total,
@@ -275,33 +129,23 @@ def main() -> None:
         "value_core_r1_ratio": round(core / _R1_CORE_RECORDED, 3),
         "queries": timings,
         "spread_pct": spreads,
-        "worst_spread": worst,
-        "delta_vs_prev_spread_units": delta_units,
-        "regression_flags": regression_flags,
+        "worst_spread": max(spreads, key=spreads.get),
         "host_calibration": calibration,
-        "host_speed_vs_prev": host_speed_vs_prev,
-        "runs_per_query": runs,
-        "flaky_reruns": sorted(n for n in flaky if n in timings),
+        "runs_per_query": RUNS_PER_QUERY,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     print(json.dumps(record))
-    # Truncation-proofing (r13 verdict item 2 — two rounds of cross-round
-    # comparison died to the recorder keeping only the LAST N bytes of
-    # stdout, front-truncating the line above).  Additions only:
-    # (a) a COMPACT second line carrying the same contract keys minus the
-    #     per-query observability extras — short enough to survive the
-    #     tail window intact, and being the LAST '{"metric"' occurrence
-    #     it is what tail parsers (this file's _last_round_record
-    #     included) pick up;
-    # (b) the full record dumped to BENCH_LAST.json beside this script
-    #     (timings only — never query results; every run overwrites it).
+    # A compact second line with the same keys minus worst_spread and
+    # runs_per_query, short enough to survive a recorder that keeps only
+    # the tail of stdout, and the full record in BENCH_LAST.json beside
+    # this script (timings only — never query results; every run
+    # overwrites it).
     compact = {
         k: record[k]
         for k in (
             "metric", "value", "unit", "value_core_r1",
             "value_core_r1_ratio", "queries", "spread_pct",
-            "regression_flags", "host_calibration", "host_speed_vs_prev",
-            "sf",
+            "host_calibration", "sf",
         )
     }
     print(json.dumps(compact, separators=(",", ":")))

@@ -1032,9 +1032,13 @@ def embedding_neardup_exact(
     ``list_reduce``) — float64 add is deterministic given order, so
     every cosine, the threshold decision, and the rounded output are
     unchanged. Norms accumulate the same way. Mixed-dimension pairs
-    produce no output (the zip_with semantics), NaN/NULL elements
-    poison their pairs out exactly as before, and NULL ids/vectors
-    never pair.
+    produce no output (the zip_with semantics). A NaN element makes the
+    pair's cosine NaN, and the pair is KEPT: Spark and DuckDB both rank
+    NaN above every double, so ``NaN >= threshold`` holds. A NULL
+    element makes the cosine NULL, so its vector never pairs (it is
+    filtered out before scoring, since Arrow hands NULL elements to
+    NumPy as NaN). NULL ids/vectors never pair, and a pair whose norm
+    product is 0 is dropped, like the oracle's ``NULLIF(.., 0)``.
 
     ``blocks`` defaults to the session's default parallelism; the pair
     SET is independent of it. Each block is replicated ``blocks`` times
@@ -1045,7 +1049,11 @@ def embedding_neardup_exact(
     id_t = df.schema[id_col].dataType.simpleString()
     base = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    ).filter(F.col("v").isNotNull() & F.col("id").isNotNull())
+    ).filter(
+        F.col("v").isNotNull()
+        & F.col("id").isNotNull()
+        & F.forall("v", lambda x: x.isNotNull())
+    )
     if blocks is None:
         blocks = spark.sparkContext.defaultParallelism
     n_blocks = max(int(blocks), 1)
@@ -1108,7 +1116,8 @@ def embedding_neardup_exact(
                 denom = np.sqrt(na)[:, None] * np.sqrt(nb)[None, :]
                 with np.errstate(divide="ignore", invalid="ignore"):
                     cos = acc / denom
-                mask = (denom != 0.0) & (cos >= thr)
+                # NaN ranks above every double, as in Spark and DuckDB
+                mask = (denom != 0.0) & (np.isnan(cos) | (cos >= thr))
                 # zip_with semantics: a mixed-dimension pair never scores
                 mask &= la[:, None] == lb[None, :]
                 if bool(same):

@@ -3802,6 +3802,50 @@ class TestRegistrableDomain:
         assert "LocalRelation" in opt
         assert opt.count("applySchemaToPythonRDD") <= 1  # only the input df
 
+    def test_suffix_cache_never_pairs_one_session_id_with_another_relation(
+        self, monkeypatch
+    ):
+        """A reader that looks at the suffix-relation cache between the
+        stores of a write must see either the old entry or the new one,
+        never the new session's id with the old session's relation
+        (``sync.py`` constructs queries from a thread pool).  The cache
+        here is a list subclass whose ``__setitem__`` runs such a reader
+        after every store."""
+        from types import SimpleNamespace
+
+        from hobbes_spark.functions import web
+
+        class Session:
+            def __init__(self, app_id):
+                self.sparkContext = SimpleNamespace(applicationId=app_id)
+                self.rel = object()
+
+            def sql(self, _text):
+                return self.rel
+
+        old, new = Session("app-old"), Session("app-new")
+        seen = []
+
+        class ReadBetweenStores(list):
+            reading = True
+
+            def __setitem__(self, i, v):
+                super().__setitem__(i, v)
+                if not ReadBetweenStores.reading:
+                    ReadBetweenStores.reading = True
+                    try:
+                        seen.append(web._psl_suffix_rel(new))
+                    finally:
+                        ReadBetweenStores.reading = False
+
+        monkeypatch.setattr(
+            web, "_RD_REL_CACHE", ReadBetweenStores(web._RD_REL_CACHE)
+        )
+        assert web._psl_suffix_rel(old) is old.rel  # cached, no reader
+        ReadBetweenStores.reading = False
+        assert web._psl_suffix_rel(new) is new.rel
+        assert seen and all(r is new.rel for r in seen)
+
     def test_generator_parses_upstream_syntax(self):
         """tools/gen_psl.py must digest the REAL upstream file's syntax
         unchanged: unicode rules punycode to A-labels, exceptions and

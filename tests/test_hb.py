@@ -1,7 +1,13 @@
-"""End-to-end tests for the ``.hb`` front-end: the reference's own 7 test
-programs (`/root/reference/tests/transformations/*.hb`) parse, compile and
-run against fixtures shaped like the OData feeds they were written for.
+"""End-to-end tests for the ``.hb`` front-end: seven programs in
+``tests/hb_programs/`` parse, compile and run against fixtures shaped like
+the OData and REST feeds they are written for.
 
+The programs are in-repo stand-ins for the reference's own 7 test
+programs (``tests/transformations/*.hb``), one each, exercising the
+constructs SURVEY §2 cites from them: provider headers and ``!##``
+comment blocks, ``maxby`` folds, rename-then-recreate, regex+int
+derives, nested ``if``, tolerant slices, pivots, group sums, ``keys``
+and ``index rows by``, and short/long moving means with missing cleanup.
 This is the reference's `.hb` corpus test strategy (SURVEY §5) applied to
 the new engine.
 """
@@ -20,7 +26,7 @@ from hobbes_spark.hb import compile_hb, parse_program, run_hb
 from hobbes_spark.hb.parser import parse_statement, tokenize
 from hobbes_spark.pipeline import Pipeline
 
-HB_DIR = "/root/reference/tests/transformations"
+HB_DIR = os.path.join(os.path.dirname(__file__), "hb_programs")
 HB_FILES = sorted(glob.glob(os.path.join(HB_DIR, "*.hb")))
 
 
@@ -37,7 +43,7 @@ def test_corpus_parses():
 
 
 def test_header_and_comments():
-    prog = parse_program(open(os.path.join(HB_DIR, "Velocity.hb")).read())
+    prog = parse_program(open(os.path.join(HB_DIR, "velocity.hb")).read())
     assert prog.properties["provider"] == "odata"
     assert prog.properties["meta"] == {"category": "workitems", "name": "flowerpot"}
     # markdown blocks are part of the language (MTTR.hb:11-16)
@@ -167,7 +173,7 @@ def test_gandalf_logic(spark, name):
 
 
 def test_velocity(spark):
-    out = _run(os.path.join(HB_DIR, "Velocity.hb"), _revisions(spark, "iteration"))
+    out = _run(os.path.join(HB_DIR, "velocity.hb"), _revisions(spark, "iteration"))
     rows = out.collect()
     assert out.columns == ["Velocity 3", "Velocity 7"]
     assert len(rows) == 8  # one per sprint (pivot on SprintNumber)
@@ -175,7 +181,7 @@ def test_velocity(spark):
 
 
 def test_mttr(spark):
-    out = _run(os.path.join(HB_DIR, "MTTR.hb"), _revisions(spark, "sprint"))
+    out = _run(os.path.join(HB_DIR, "mttr.hb"), _revisions(spark, "sprint"))
     rows = out.collect()
     assert out.columns == [
         "Mean time to recover 5", "Mean time to recover 11",
@@ -187,7 +193,7 @@ def test_mttr(spark):
 
 
 def test_logic_cycle_time(spark):
-    out = _run(os.path.join(HB_DIR, "LogicCycleTime.hb"), _revisions(spark, "sprint"))
+    out = _run(os.path.join(HB_DIR, "cycle_time.hb"), _revisions(spark, "sprint"))
     rows = out.collect()
     assert rows
     assert {"SprintNumber", "temp", "tick"} <= set(out.columns)
@@ -196,7 +202,7 @@ def test_logic_cycle_time(spark):
 
 
 def test_commit_frequency(spark):
-    out = _run(os.path.join(HB_DIR, "Logic Commit Frequency.hb"), _commits(spark))
+    out = _run(os.path.join(HB_DIR, "commit_frequency.hb"), _commits(spark))
     rows = out.collect()
     assert out.columns == ["Frequency", "Frequency long"]
     # 120 days, moving mean 30 non-null from day 30 on; filter keeps those

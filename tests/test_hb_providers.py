@@ -1,18 +1,25 @@
 """Provider-header resolution: the whole §3.1 lifecycle — ``.hb`` text →
 provider fetch (fake transport) → JSON flatten/sniff → transform fold —
-using the reference's own programs where possible.
+using the in-repo stand-ins for the reference's programs
+(``tests/hb_programs/``) where possible.
 """
 
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
 from hobbes_spark.hb import parse_program, run_hb_program
 from hobbes_spark.sources.odata import odata_url, read_odata
 
-FLOWERPOT = open("/root/reference/tests/transformations/flowerpot.hb").read()
+HB_DIR = os.path.join(os.path.dirname(__file__), "hb_programs")
+
+
+def _program(name: str) -> str:
+    with open(os.path.join(HB_DIR, name)) as f:
+        return f.read()
 
 
 def _revision(wid, rev, sprint, wtype="User Story", cat="Completed", state="Closed"):
@@ -89,11 +96,14 @@ def test_odata_pagination_and_flattening(spark):
 
 
 def test_flowerpot_hb_via_odata_provider(spark):
-    """The reference's flowerpot.hb, header included, end-to-end against
+    """The flowerpot.hb stand-in, header included, end-to-end against
     the fake feed: provider resolution reads url/select/filter/expand
     from the program itself."""
-    pages = _odata_pages()
-    out = run_hb_program(spark, FLOWERPOT, fetcher=_fetcher(pages))
+    fetch = _fetcher(_odata_pages())
+    out = run_hb_program(spark, _program("flowerpot.hb"), fetcher=fetch)
+    first = fetch.calls[0]
+    assert "$select=WorkItemId" in first and "$expand=Iteration" in first
+    assert "$filter=Iteration/StartDate" in first
     rows = out.collect()
     assert rows
     assert {"Sprint Name", "Sprint Number", "State", "WorkItemId"} <= set(out.columns)
@@ -103,7 +113,7 @@ def test_flowerpot_hb_via_odata_provider(spark):
 
 def test_rest_multi_url(spark):
     """Many-URL rest source with a values: field (Commit Frequency shape)."""
-    prog = parse_program(open("/root/reference/tests/transformations/Logic Commit Frequency.hb").read())
+    prog = parse_program(_program("commit_frequency.hb"))
     assert isinstance(prog.properties["url"], list) and len(prog.properties["url"]) == 15
     assert prog.properties["values"] == "value"
 

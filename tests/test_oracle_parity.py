@@ -81,59 +81,24 @@ def test_no_rows_only_queries_remain():
     )
 
 
-def test_driver_window_contract():
-    """The driver records the FIRST 50 catalog entries: the reordered
-    window must hold exactly 50 distinct oracled names (a rows-only row
-    in the window wastes a signing slot).  Round-7 criterion: the
-    window is the CHANGE-AWARE staleness cohort of
-    ``tools/window_cohort.py`` — queries whose implementing functions
-    were edited after their last driver signature outrank pure age
-    (their signatures no longer cover the code that runs), then the
-    longest-unsigned by (last-signed round, name); never-signed entries
-    count as round 0 and automatically lead.  Round-9 criterion (r8
-    verdict item 1): the cohort is computed AS OF the record named by
-    ``queries.WINDOW_FROZEN_AT`` — not the newest file on disk — so
-    this test stays green when the next round's CORRECTNESS record
-    lands.  Rotation-due enforcement (newest record != stamp) lives in
-    tools/gate_check.py, which is loud without making `pytest tests/`
-    red at every round boundary."""
-    import os
-    import re
-    import sys
+def test_catalog_keeps_declaration_order():
+    """``QUERIES`` lists the queries in the order ``queries.py`` declares
+    them: nothing reorders the catalog at import, and no name is
+    declared twice (a second ``@q`` would silently replace the first)."""
+    import ast
+    import inspect
 
-    from hobbes_spark.queries import WINDOW_FROZEN_AT
+    from hobbes_spark import queries
 
-    names = list(QUERIES)
-    window = names[:50]
-    assert len(set(window)) == 50
-    assert all(QUERIES[n].oracle for n in window)
-
-    frozen_round = int(re.fullmatch(r"CORRECTNESS_r(\d+)", WINDOW_FROZEN_AT).group(1))
-
-    root = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
-    sys.path.insert(0, root)
-    try:
-        from tools.window_cohort import (
-            compute_cohort,
-            last_signed_rounds,
-            record_commits,
-        )
-    finally:
-        sys.path.remove(root)
-    if not last_signed_rounds(frozen_round):
-        return  # fresh checkout without driver records: nothing to pin
-    if not record_commits():
-        # tarball checkout without git history: change-awareness can't
-        # compute and compute_cohort degrades to pure staleness, which
-        # the change-aware static window legitimately differs from
-        return
-    expected = set(compute_cohort(50, as_of=frozen_round))
-    assert set(window) == expected, (
-        f"window must be the change-aware staleness cohort as of "
-        f"{WINDOW_FROZEN_AT}: "
-        f"missing={sorted(expected - set(window))}, "
-        f"extra={sorted(set(window) - expected)}"
-    )
+    tree = ast.parse(inspect.getsource(queries))
+    declared = [
+        deco.args[0].value
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef)
+        for deco in node.decorator_list
+        if isinstance(deco, ast.Call) and getattr(deco.func, "id", None) == "q"
+    ]
+    assert declared == list(QUERIES)
 
 
 # --------------------------------------------------------------------- #
@@ -196,6 +161,36 @@ def test_concurrency_peak_timestamp_ties_parity(spark, tmp_path):
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     got, exp = _mini_gate(spark, tmp_path, "concurrency_peak", {"events": ev})
     assert got == exp
+
+
+def test_embedding_neardup_exact_nan_parity(spark, tmp_path):
+    """A NaN element makes every cosine it touches NaN, and Spark and
+    DuckDB both rank NaN above every double, so ``cos >= threshold``
+    keeps those pairs; the NumPy kernel used to drop them.  A NULL
+    element nulls the cosine instead, so that vector never pairs, and
+    a zero vector pairs only with the NaN one (0 * NaN is NaN, not 0)."""
+    nan = float("nan")
+    ones = [1.0] * 64
+    emb = spark.createDataFrame(
+        [
+            (1, ones, 0),
+            (2, ones[:-1] + [0.9], 0),
+            (3, [(-1.0) ** i for i in range(64)], 0),
+            (4, [nan] + ones[1:], 0),
+            (5, [None] + ones[1:], 0),
+            (6, None, 0),
+            (7, [0.0] * 64, 0),
+        ],
+        "vec_id bigint, embedding array<float>, label int",
+    )
+    got, exp = _mini_gate(
+        spark, tmp_path, "embedding_neardup_exact", {"embeddings": emb}
+    )
+    assert got == exp
+    assert got[0] == ["cos", "id_a", "id_b"]
+    assert {(a, b) for _, a, b in got[1]} == {
+        ("1", "2"), ("1", "4"), ("2", "4"), ("3", "4"), ("4", "7"),
+    }
 
 
 def test_buckets_mean_small_series_parity(spark, tmp_path):

@@ -10,7 +10,9 @@ Differences from tests/test_oracle_parity.py (the fast dev loop):
   Spark BIGINT ("42") — the exact class of bug the driver's value hash
   catches and the lenient snapshot masked (group_all_sum, round 1).
 
-Usage: python tools/gate_check.py [sf_dir] [query ...|--window]
+Usage: python tools/gate_check.py [sf_dir] [query ...]
+
+With no query names every catalog query is checked.
 """
 
 import math
@@ -43,53 +45,22 @@ def _snapshot(pdf):
     return cols, rows
 
 
-def _check_window_rotation():
-    """Rotation-due enforcement (r8 verdict item 1): `pytest tests/`
-    pins the window against queries.WINDOW_FROZEN_AT and stays green
-    across round boundaries; the LOUD "a newer record landed, rotate
-    the window" signal lives HERE, where the builder runs it every
-    round as part of the gate sweep.  --allow-stale-window overrides
-    (e.g. to re-verify an old window mid-rotation)."""
-    import glob
-    import re
-
-    from hobbes_spark.queries import WINDOW_FROZEN_AT
-
-    frozen = int(re.fullmatch(r"CORRECTNESS_r(\d+)", WINDOW_FROZEN_AT).group(1))
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds = [
-        int(re.search(r"CORRECTNESS_r(\d+)\.json$", p).group(1))
-        for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
-    ]
-    newest = max(rounds, default=0)
-    if newest > frozen:
-        raise SystemExit(
-            f"GATE: WINDOW ROTATION DUE — CORRECTNESS_r{newest:02d}.json "
-            f"landed but queries.WINDOW_FROZEN_AT is still "
-            f"{WINDOW_FROZEN_AT!r}.  Rotate _DRIVER_WINDOW_PRIORITY to "
-            f"`python tools/window_cohort.py --as-of {newest}` and bump "
-            f"the stamp (or pass --allow-stale-window to override)."
-        )
-
-
 def main():
     args = sys.argv[1:]
-    # sf_dir is optional: `gate_check.py --window` / `gate_check.py q1`
-    # must not eat the first operand as a directory
-    if args and not args[0].startswith("--") and os.path.isdir(args[0]):
+    # sf_dir is optional: `gate_check.py q1` must not eat the first
+    # operand as a directory
+    if args and os.path.isdir(args[0]):
         sf_dir, args = args[0], args[1:]
     else:
         sf_dir = "/root/testdata/sf0.01"
     only = set(args)
-    if "--allow-stale-window" in only:
-        only -= {"--allow-stale-window"}
-    else:
-        _check_window_rotation()
 
     from pyspark.sql import SparkSession
 
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        SparkSession.builder.master(
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS', os.cpu_count())}]"
+        )
         .appName("gate_check")
         .config("spark.sql.shuffle.partitions", "32")
         .getOrCreate()
@@ -103,12 +74,6 @@ def main():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-
-    # --window: the exact 50 entries the driver will sign this round
-    # (combinable with explicit names)
-    if "--window" in only:
-        only = (only - {"--window"}) | set(list(QUERIES)[:50])
-        print(f"gate: --window -> {len(only)} entries")
 
     # a typo'd filter name must not produce a false green: a gate that
     # "passes" having checked nothing is worse than one that fails
