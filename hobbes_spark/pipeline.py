@@ -30,6 +30,9 @@ matrix->matrix closure composition, `Reader.fs:86-95`).
 from __future__ import annotations
 
 import hashlib
+import os
+import threading
+from collections import OrderedDict
 from collections.abc import Sequence
 from functools import reduce as _reduce
 from typing import Optional, Union
@@ -55,8 +58,6 @@ def _nanos_ts_cols(path: str) -> list[str]:
     schema only (no row data touched). Empty when pyarrow is unavailable
     or the path isn't introspectable (e.g. a glob)."""
     try:
-        import os
-
         import pyarrow.parquet as pq
 
         if os.path.isdir(path):
@@ -88,8 +89,63 @@ def _nanos_ts_cols(path: str) -> list[str]:
         return []
 
 
+#: Bound on the schema memo. Every entry is one (path, listing, confs)
+#: key; a caller that keeps writing fresh directories (a sync run into a
+#: new cache dir) evicts the least recently read entries past this.
+SCHEMA_MEMO_MAX = 256
+_SCHEMA_MEMO: OrderedDict = OrderedDict()
+_SCHEMA_MEMO_LOCK = threading.Lock()
+# Session confs that change what parquet schema inference returns.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+)
+
+
+def _hidden(name: str) -> bool:
+    """A name Spark's file index leaves out of a scan: ``_SUCCESS``,
+    ``.crc`` files; ``_``-prefixed partition dirs (``_k=1``) stay in."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _data_files(path: str) -> tuple | None:
+    """``(relative name, size, st_mtime_ns)`` of every file Spark would
+    read under ``path``; None when ``path`` is not a local file or
+    directory (a glob, a URI) or cannot be listed."""
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return (("", st.st_size, st.st_mtime_ns),)
+        if not os.path.isdir(path):
+            return None
+        out = []
+        for root, dirs, files in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not _hidden(d))
+            for f in sorted(files):
+                if not _hidden(f):
+                    full = os.path.join(root, f)
+                    st = os.stat(full)
+                    out.append(
+                        (os.path.relpath(full, path), st.st_size, st.st_mtime_ns)
+                    )
+        return tuple(out)
+    except OSError:
+        return None
+
+
+def _memo_key(spark: SparkSession, path: str, listing: tuple) -> tuple:
+    confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+    return os.path.realpath(path), listing, confs
+
+
 def read_parquet_any_ts(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` that tolerates TIMESTAMP(NANOS) columns.
+    """``spark.read.parquet`` that tolerates TIMESTAMP(NANOS) columns and
+    infers each unchanged path's schema once.
 
     Stock Spark sessions reject nanosecond parquet timestamps outright
     (PARQUET_TYPE_ILLEGAL); the escape hatch conf
@@ -107,11 +163,43 @@ def read_parquet_any_ts(spark: SparkSession, path: str) -> DataFrame:
     introspect (unreadable glob) loads as raw bigint instead of failing
     loudly; the sniff therefore walks directories (including one
     partition level) so that case is confined to exotic paths, and
-    callers hitting it see bigint columns rather than silent truncation."""
-    nanos = _nanos_ts_cols(path)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    callers hitting it see bigint columns rather than silent truncation.
+
+    Schema memo: ``spark.read.parquet`` runs one Spark job per call to
+    infer the schema. The inferred ``StructType`` and the footer sniff's
+    nanos columns are memoized under (the path's realpath, the relative
+    name, size and ``st_mtime_ns`` of every data file Spark would read,
+    the values of ``_SCHEMA_CONFS`` the schema was inferred under), and a
+    hit reads with ``spark.read.schema(...)``, which runs no job. An
+    overwrite changes the listing, so it re-infers. The memo holds at
+    most ``SCHEMA_MEMO_MAX`` entries, least recently read out first. A
+    path that cannot be listed (a glob, a URI) is read as before, with
+    no memo. Concurrent readers share the memo under a lock; a read
+    racing a rewrite of its path stores nothing, so a lost race only
+    re-infers."""
+    listing = _data_files(path)
+    hit = None
+    if listing is not None:
+        key = _memo_key(spark, path, listing)
+        with _SCHEMA_MEMO_LOCK:
+            hit = _SCHEMA_MEMO.get(key)
+            if hit is not None:
+                _SCHEMA_MEMO.move_to_end(key)
+    if hit is not None:
+        schema, nanos = hit
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        nanos = _nanos_ts_cols(path)
+        if nanos:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(path)
+        # keyed by the confs in force now, after the sniff's own set
+        if listing is not None and _data_files(path) == listing:
+            key = _memo_key(spark, path, listing)
+            with _SCHEMA_MEMO_LOCK:
+                _SCHEMA_MEMO[key] = (df.schema, nanos)
+                while len(_SCHEMA_MEMO) > SCHEMA_MEMO_MAX:
+                    _SCHEMA_MEMO.popitem(last=False)
     dtypes = dict(df.dtypes)
     for colname in nanos:
         # INT96 columns also footer-sniff as timestamp[ns] via pyarrow,

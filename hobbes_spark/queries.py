@@ -47,9 +47,18 @@ def _r(col, n: int):
 
     Unlike ``round``, every step is an IEEE-exact double op, so Spark and
     DuckDB produce bit-identical results (Spark's round is BigDecimal
-    HALF_UP, DuckDB's is HALF_EVEN — they disagree at boundaries)."""
+    HALF_UP, DuckDB's is HALF_EVEN — they disagree at boundaries).
+
+    Spark's ``floor`` returns a long (NaN becomes 0, infinities and
+    magnitudes past 2^63 saturate), DuckDB's a double. Every double with
+    magnitude of at least 2^52 is already whole, so only smaller ones go
+    through ``floor``; the rest, NaN and ±inf included, pass through as
+    DuckDB's ``FLOOR`` leaves them (Spark orders NaN above every double,
+    so ``abs(NaN) < 2^52`` is false)."""
     f = 10 ** n
-    return F.floor(col * f + F.lit(0.5)) / F.lit(f).cast("double")
+    y = col * f + F.lit(0.5)
+    whole = F.when(F.abs(y) < F.lit(2.0**52), F.floor(y)).otherwise(y)
+    return whole / F.lit(f).cast("double")
 
 
 def _rsql(expr: str, n: int) -> str:
@@ -3074,11 +3083,7 @@ def embedding_neardup_exact_q(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings").df
     out = embedding_neardup_exact(emb, threshold=0.35)
-    # _r's floor turns NaN into 0; the oracle's FLOOR keeps it NaN
-    cos = F.col("cos")
-    return out.select(
-        "id_a", "id_b", F.when(F.isnan(cos), cos).otherwise(_r(cos, 6)).alias("cos")
-    )
+    return out.select("id_a", "id_b", _r(F.col("cos"), 6).alias("cos"))
 
 
 def _neardup_lsh_sql(threshold: float = 0.9, offset: int = 1_000_000) -> str:

@@ -14,8 +14,9 @@ Everything here is engine-side semantics, not transport: ``$filter``
 compiles to a native Column predicate (codegen, pushdown-eligible —
 a served filter prunes the parquet scan like any other), ``$select``
 prunes columns, ``$orderby``/``$top``/``$skip`` become
-sort/limit/offset, and the envelope emitter streams ``toLocalIterator``
-so serving a page never collects the full table to the driver. An HTTP
+sort/limit/offset, and the envelope emitter collects only the page:
+``$top`` or the server ``page_size`` bounds it (with neither, the
+request itself asks for every row). An HTTP
 wrapper is a ~10-line flask/fastapi handler around
 :func:`odata_response`; it is deliberately NOT included (no server
 dependencies in the engine), matching the reference's split between the
@@ -470,13 +471,15 @@ def odata_response(
     ``@odata.count`` when ``$count=true``, and ``@odata.nextLink`` when
     a server ``page_size`` truncates the result.
 
-    Rows stream via ``toLocalIterator`` — one partition in driver
-    memory at a time, so serving page N of a 100 TB table materializes
-    one page, not the table. ``base_url`` is only needed when paging
-    (the nextLink must point somewhere). When the client sent its own
-    ``$top``, the nextLink re-issues the REMAINING top (client cap
-    minus rows already served) so following every nextLink delivers
-    exactly ``$top`` rows in total, never more.
+    The page is collected with ``collect()``: ``$top`` or ``page_size``
+    (probed with one extra row to detect truncation) bounds it, so
+    serving page N of a 100 TB table materializes one page, not the
+    table; the ``value`` list holds every served row anyway, so
+    streaming would save no memory. ``base_url`` is only needed
+    when paging (the nextLink must point somewhere). When the client
+    sent its own ``$top``, the nextLink re-issues the REMAINING top
+    (client cap minus rows already served) so following every nextLink
+    delivers exactly ``$top`` rows in total, never more.
     """
     options = options or {}
     out: dict = {"@odata.context": context}
@@ -492,13 +495,10 @@ def odata_response(
     else:
         probe = shaped
     cols = probe.columns
-    rows = []
-    truncated = False
-    for row in probe.toLocalIterator():
-        if page_size is not None and len(rows) >= page_size:
-            truncated = True
-            break
-        rows.append({c: _json_cell(v) for c, v in zip(cols, row)})
+    rows = [{c: _json_cell(v) for c, v in zip(cols, row)} for row in probe.collect()]
+    truncated = page_size is not None and len(rows) > page_size
+    if truncated:
+        del rows[page_size:]
     out["value"] = rows
 
     client_top = _opt(options, "$top")

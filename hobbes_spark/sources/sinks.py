@@ -18,6 +18,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hobbes_spark.pipeline import read_parquet_any_ts
+
 __all__ = [
     "to_data_result",
     "to_json_rows",
@@ -123,7 +125,7 @@ def checkpoint(pipeline, base_dir: str) -> "DataFrame":
     # base_dirs use the Hadoop FS API instead.)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         pipeline.df.write.mode("overwrite").parquet(path)
-    return pipeline.df.sparkSession.read.parquet(path)
+    return read_parquet_any_ts(pipeline.df.sparkSession, path)
 
 
 def write_partitioned(

@@ -65,6 +65,8 @@ from graphlib import CycleError, TopologicalSorter
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hobbes_spark.pipeline import read_parquet_any_ts
+
 __all__ = ["Configuration", "SyncReport", "sync_configurations", "read_cached"]
 
 
@@ -179,11 +181,18 @@ def _key_of(cfg: Configuration, child_keys: Mapping[str, str]) -> str:
 
 def read_cached(spark: SparkSession, cache_dir: str, key: str) -> DataFrame:
     """Read a materialized cache entry (the ``fromCache`` analog,
-    `workers/calculator.worker/src/Program.fs:7-15`)."""
+    `workers/calculator.worker/src/Program.fs:7-15`).
+
+    Reads through :func:`hobbes_spark.pipeline.read_parquet_any_ts`, so
+    an entry's schema is inferred once: the memo is keyed by the entry's
+    realpath, its data-file listing (name, size, mtime) and the
+    schema-inference confs, and holds at most ``SCHEMA_MEMO_MAX``
+    entries. A repeat read of an unchanged entry runs no Spark job; a
+    rewritten entry changes the listing and re-infers."""
     path = os.path.join(cache_dir, key)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         raise FileNotFoundError(f"No data for that key ({key})")
-    return spark.read.parquet(path)
+    return read_parquet_any_ts(spark, path)
 
 
 def _compute(
@@ -289,6 +298,8 @@ def sync_configurations(
         spark.sparkContext.setLocalProperty(
             "spark.scheduler.pool", f"sync-{threading.get_ident()}"
         )
+        # names the node on its jobs in the UI and REST API
+        spark.sparkContext.setJobDescription(f"sync:{name}")
         path = os.path.join(cache_dir, key)
         started = time.perf_counter() - t0
         with key_lock:
@@ -318,8 +329,9 @@ def sync_configurations(
                     if cfg.format_json:
                         from hobbes_spark.sources.sinks import to_data_result_json
 
+                        served = read_parquet_any_ts(spark, path)
                         with open(path + ".json", "w") as f:
-                            f.write(to_data_result_json(spark.read.parquet(path)))
+                            f.write(to_data_result_json(served))
                     with lock:
                         report.statuses[name] = "done"
                         report.attempts[name] = attempt

@@ -516,3 +516,13 @@ def test_non_string_option_values_work_and_reject(spark):
     assert body["@odata.count"] == 20
     with pytest.raises(ValueError, match="not supported"):
         apply_odata_options(df, {"$skiptoken": 3})
+
+
+def test_unordered_page_collects_in_one_job(spark, count_jobs):
+    """Without ``$orderby``/``$top`` the page is the filtered frame, every
+    partition of it; it is collected in one job, not streamed one job per
+    partition."""
+    df = spark.range(0, 40, 1, 4)
+    jobs, page = count_jobs(lambda: odata_response(df, {"$filter": "id lt 10"}))
+    assert jobs == 1
+    assert sorted(r["id"] for r in page["value"]) == list(range(10))

@@ -193,6 +193,55 @@ def test_embedding_neardup_exact_nan_parity(spark, tmp_path):
     }
 
 
+def test_rounding_keeps_nan_parity(spark, tmp_path):
+    """A NaN sum must round to NaN in both engines: Spark's ``floor``
+    returns a long and used to turn NaN into 0, where DuckDB's ``FLOOR``
+    keeps it (``date_parts`` rounds ``SUM(value)`` with ``_r``)."""
+    from pyspark.sql import functions as F
+
+    rows = [
+        (1, "2024-07-03 10:00:00", 1.005), (2, "2024-07-04 10:00:00", 2.0),
+        (3, "2024-08-01 10:00:00", float("nan")), (4, "2024-08-02 10:00:00", 1.0),
+        (5, "2024-09-01 10:00:00", None),
+    ]
+    ev = spark.createDataFrame(
+        [(i, ts, 7, "click", v, "{}") for i, ts, v in rows],
+        "event_id bigint, ts string, user_id bigint, event_type string,"
+        " value double, props string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    got, exp = _mini_gate(spark, tmp_path, "date_parts", {"events": ev})
+    assert got == exp
+    assert ("2024", "8", "2", "NULL") in {
+        tuple(r[i] for i in (got[0].index(c) for c in ("y", "m", "count", "value")))
+        for r in got[1]
+    }
+
+
+def test_round_helper_matches_duckdb_floor_at_the_edges(spark):
+    """``_r`` against ``_rsql`` in DuckDB over NaN, ±inf, NULL, magnitudes
+    past 2^63 and ordinary values: the same double, NaN for NaN."""
+    from pyspark.sql import functions as F
+
+    from hobbes_spark.queries import _r, _rsql
+
+    vals = [float("nan"), float("inf"), -float("inf"), None, 1e300, -3e19,
+            2.0**52 + 1, 1.005, -1.005, 0.125, -0.0, 12345.678901]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "i int, x double")
+    got = {r.i: r.y for r in df.select("i", _r(F.col("x"), 2).alias("y")).collect()}
+    con = duckdb.connect()
+    exp = dict(con.execute(
+        f"SELECT i, {_rsql('x', 2)} FROM (VALUES "
+        + ", ".join(f"({i}, CAST('{v}' AS DOUBLE))" if v is not None else f"({i}, NULL)"
+                    for i, v in enumerate(vals))
+        + ") t(i, x)"
+    ).fetchall())
+    con.close()
+    for i, v in enumerate(vals):
+        g, e = got[i], exp[i]
+        assert (g is None and e is None) or (math.isnan(g) and math.isnan(e)) or g == e, (
+            v, g, e)
+
+
 def test_buckets_mean_small_series_parity(spark, tmp_path):
     """A series with fewer than 10 distinct days must still split into
     per-row buckets in BOTH engines — the oracle's total // 10 used to

@@ -582,3 +582,119 @@ def test_data_result_encodes_nested_and_decimal(spark):
     out = _json.loads(to_data_result_json(df))
     row = out["values"][0]
     assert row == [1, ["2020-01-02"], 1.5, "0102"]
+
+
+def _nanos_table(n=3):
+    import pandas as pd
+    import pyarrow as pa
+
+    ts = pd.Series(pd.to_datetime([f"2021-01-0{i + 1} 12:00:00" for i in range(n)]))
+    return pa.table({
+        "t": pa.Array.from_pandas(ts, type=pa.timestamp("ns")),
+        "x": pa.array(range(n), type=pa.int64()),
+    })
+
+
+def test_schema_memo_hits_single_file_and_partitioned(tmp_path, spark, count_jobs):
+    """A second read of an unchanged path, a single file or a partitioned
+    directory, runs no Spark job and reads the same rows."""
+    import pyarrow.parquet as pq
+
+    flat = tmp_path / "flat.parquet"
+    pq.write_table(_nanos_table(), flat)
+    part = str(tmp_path / "part")
+    spark.range(12).selectExpr("id", "id % 3 AS k").write.partitionBy("k").parquet(part)
+
+    for path in (str(flat), part):
+        first, df1 = count_jobs(lambda: read_parquet_any_ts(spark, path))
+        assert first >= 1  # the inference job
+        again, df2 = count_jobs(lambda: read_parquet_any_ts(spark, path))
+        assert again == 0
+        assert df2.schema == df1.schema
+        assert sorted(df2.collect()) == sorted(df1.collect())
+    assert dict(df2.dtypes) == {"id": "bigint", "k": "int"}
+    assert sorted(r.k for r in df2.collect()) == sorted(i % 3 for i in range(12))
+
+
+def test_schema_memo_sees_a_rewrite_with_another_schema(tmp_path, spark):
+    """The memo key is the file listing, not the path: overwriting a path
+    with a different schema reads the new schema, whether the writer
+    replaces the files (Spark) or rewrites one in place (pyarrow)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "d")
+    spark.range(3).selectExpr("id AS a").write.parquet(d)
+    assert read_parquet_any_ts(spark, d).columns == ["a"]
+    spark.range(3).selectExpr("CAST(id AS STRING) AS b").write.mode("overwrite").parquet(d)
+    df = read_parquet_any_ts(spark, d)
+    assert dict(df.dtypes) == {"b": "string"}
+    assert sorted(r.b for r in df.collect()) == ["0", "1", "2"]
+
+    f = str(tmp_path / "one.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), f)
+    assert read_parquet_any_ts(spark, f).columns == ["a"]
+    pq.write_table(pa.table({"b": ["x", "y"], "c": [1.5, 2.5]}), f)
+    df = read_parquet_any_ts(spark, f)
+    assert df.columns == ["b", "c"]
+    assert sorted(r.b for r in df.collect()) == ["x", "y"]
+
+
+def test_schema_memo_reinfers_when_nanos_as_long_flips(tmp_path, spark, count_jobs):
+    """The inference confs are part of the key: resetting nanosAsLong
+    makes the next read infer again (and set it again)."""
+    import pyarrow.parquet as pq
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    path = str(tmp_path / "ns.parquet")
+    pq.write_table(_nanos_table(), path)
+    prior = spark.conf.get(conf, None)
+    try:
+        spark.conf.set(conf, "false")
+        read_parquet_any_ts(spark, path)
+        assert spark.conf.get(conf) == "true"
+        hit, _ = count_jobs(lambda: read_parquet_any_ts(spark, path))
+        assert hit == 0
+        spark.conf.set(conf, "false")
+        miss, df = count_jobs(lambda: read_parquet_any_ts(spark, path))
+        assert miss >= 1
+        assert spark.conf.get(conf) == "true"
+        assert dict(df.dtypes)["t"] == "timestamp"
+        assert [r.x for r in df.orderBy("t").collect()] == [0, 1, 2]
+    finally:
+        if prior is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prior)
+
+
+def test_schema_memo_concurrent_readers(tmp_path, spark, monkeypatch):
+    """More reader threads than cores over more paths than the memo holds,
+    with a short switch interval: every read sees its own path's schema
+    and the memo never outgrows its bound."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    import hobbes_spark.pipeline as P
+
+    monkeypatch.setattr(P, "SCHEMA_MEMO_MAX", 3)
+    paths = []
+    for i in range(6):
+        p = str(tmp_path / f"t{i}")
+        spark.range(2).selectExpr(f"id AS c{i}").write.parquet(p)
+        paths.append(p)
+
+    def read(j):
+        i = j % len(paths)
+        return i, read_parquet_any_ts(spark, paths[i]).columns
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [pool.submit(read, j) for j in range(48)]
+            got = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(cols == [f"c{i}"] for i, cols in got)
+    assert len(P._SCHEMA_MEMO) <= 3

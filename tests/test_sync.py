@@ -334,3 +334,51 @@ def test_validation_errors(spark, tmp_path):
         Configuration("x", program=BASE, merge=["a"])
     with pytest.raises(FileNotFoundError, match="No data for that key"):
         read_cached(spark, cache, "deadbeef")
+
+
+def test_serve_path_job_budget(spark, tmp_path, count_jobs):
+    """A cached serve runs only the jobs that compute its answer: no
+    schema-inference job for the read (memo hit), one collect for the
+    DataResult JSON, and for an OData page only the count and the page
+    (the read's inference job used to make it 4)."""
+    import json
+
+    from hobbes_spark.sources.odata_serve import odata_response
+    from hobbes_spark.sources.sinks import to_data_result_json
+
+    cache = str(tmp_path / "cache")
+    rows = "\n".join(f'  - ["k{i % 7}", {i}]' for i in range(40))
+    program = (
+        f"provider: localdata\ncolumns: k v\nrows:\n{rows}\n\n\n"
+        "create column v2 (v * 2)\n"
+    )
+    rep = sync_configurations(spark, [Configuration("n", program=program)], cache)
+    key = rep.cache_keys["n"]
+    read_cached(spark, cache, key)  # the one inference: the memo now holds it
+
+    jobs, served = count_jobs(lambda: to_data_result_json(read_cached(spark, cache, key)))
+    assert jobs == 1
+    assert json.loads(served)["rowCount"] == 40
+
+    opts = {"$filter": "v gt 5", "$orderby": "v desc", "$top": "10",
+            "$skip": "3", "$count": "true"}
+    jobs, page = count_jobs(lambda: odata_response(read_cached(spark, cache, key), opts))
+    assert jobs <= 3
+    assert page["@odata.count"] == 34
+    assert [r["v"] for r in page["value"]] == list(range(36, 26, -1))
+
+
+def test_node_jobs_carry_sync_description(spark, tmp_path):
+    """Each node's jobs are described ``sync:<name>`` in the status store
+    the UI and REST API read."""
+    sc = spark.sparkContext
+    rep = sync_configurations(spark, _dag(), str(tmp_path / "cache"), max_parallelism=2)
+    assert rep.converged
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    descriptions = set()
+    for i in range(jobs.size()):
+        d = jobs.apply(i).description()
+        if d.isDefined():
+            descriptions.add(d.get())
+    assert {f"sync:{n}" for n in ("base", "other", "both", "joined")} <= descriptions
